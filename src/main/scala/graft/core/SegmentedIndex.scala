@@ -83,15 +83,8 @@ object SegmentedIndex {
     * maintained-store gates regressed ~0.5-2s warm each). Reading a
     * footer is microseconds per file; the lists here are always
     * batch- or segment-bounded, never the layout. */
-  def footerRows(files: Seq[java.nio.file.Path]): Long = {
-    val conf = new org.apache.hadoop.conf.Configuration()
-    files.iterator.map { p =>
-      val in = org.apache.parquet.hadoop.util.HadoopInputFile
-        .fromPath(new org.apache.hadoop.fs.Path(p.toUri), conf)
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-      try r.getRecordCount finally r.close()
-    }.sum
-  }
+  def footerRows(files: Seq[java.nio.file.Path]): Long =
+    files.iterator.map(LocalParquet.recordCount).sum
 
   /** The torn-/partial-parquet signatures a crashed writer can leave
     * behind: a truncated tail (EOF while reading the footer length),
@@ -111,22 +104,10 @@ object SegmentedIndex {
     * layout's maintained count from a bounded tree: a fresh segment,
     * a just-compacted rewrite, a copied seed. */
   def footerRowCountOf(root: java.nio.file.Path): Long =
-    if (!Files.isDirectory(root)) 0L
-    else {
-      val dataFiles = Seq.newBuilder[java.nio.file.Path]
-      def walk(dir: java.nio.file.Path): Unit =
-        Using.resource(Files.list(dir)) { s =>
-          s.iterator().asScala.toList.foreach { p =>
-            val n = p.getFileName.toString
-            if (!n.startsWith("_") && !n.startsWith(".")) {
-              if (Files.isDirectory(p)) walk(p)
-              else if (n.endsWith(".parquet")) dataFiles += p
-            }
-          }
-        }
-      walk(root)
-      footerRows(dataFiles.result())
-    }
+    footerRows(parquetFiles(root))
+
+  private def parquetFiles(root: java.nio.file.Path): Seq[java.nio.file.Path] =
+    LocalParquet.dataFiles(root).filter(_.getFileName.toString.endsWith(".parquet"))
 
   /** Tombstone `keys` under `keyCol` (explicit — [[live]] later joins
     * on the same name, and a positional guess would silently tombstone
@@ -476,33 +457,11 @@ object SegmentedIndex {
     * layouts only — no writer races the scan. */
   private[graft] def foreachSidecarRow(dir: java.nio.file.Path)
       (f: org.apache.parquet.example.data.Group => Unit): Unit =
-    if (Files.isDirectory(dir)) {
-      val conf = new org.apache.hadoop.conf.Configuration()
-      // recurse like footerRowCountOf: a sidecar may itself be a
-      // segmented mini-layout (the postings `_df_deltas` appends one
-      // gen=<g> partition dir per epoch); partition-dir VALUES are not
-      // row fields, which none of the driver-side folds need
-      def walk(d: java.nio.file.Path): Unit =
-        Using.resource(Files.list(d)) { s =>
-          s.iterator().asScala.toList.foreach { p =>
-            val n = p.getFileName.toString
-            if (!n.startsWith("_") && !n.startsWith(".")) {
-              if (Files.isDirectory(p)) walk(p)
-              else if (n.endsWith(".parquet")) {
-                val r = org.apache.parquet.hadoop.ParquetReader
-                  .builder(new org.apache.parquet.hadoop.example.GroupReadSupport(),
-                    new org.apache.hadoop.fs.Path(p.toUri))
-                  .withConf(conf).build()
-                try {
-                  var g = r.read()
-                  while (g != null) { f(g); g = r.read() }
-                } finally r.close()
-              }
-            }
-          }
-        }
-      walk(dir)
-    }
+    // recurse like footerRowCountOf: a sidecar may itself be a
+    // segmented mini-layout (the postings `_df_deltas` appends one
+    // gen=<g> partition dir per epoch); partition-dir VALUES are not
+    // row fields, which none of the driver-side folds need
+    parquetFiles(dir).foreach(p => LocalParquet.foreachRecord(p)(f))
 
   /** Distinct tombstone INSTANCES in the sidecar: gen-scoped layouts
     * count distinct (key, upto_gen) pairs — a key re-deleted at a

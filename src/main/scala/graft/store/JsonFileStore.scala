@@ -82,16 +82,15 @@ final class JsonFileStore(basedirRaw: String) extends AssetStore {
 
   /** Version lookup: reads the experiment config's
     * `exp_info.pyaerocom_version`, memoized; missing/invalid config →
-    * 0.0.1 (`jsonfiledb.py:224-258`). */
+    * 0.0.1 (`jsonfiledb.py:224-258`). The config is found where a
+    * config get finds it: the filename-encoded path first, then the
+    * unencoded legacy one. */
   private val versionCache = new java.util.concurrent.ConcurrentHashMap[(String, String), Pep440Version]()
   private[store] def getVersion(project: String, experiment: String): Pep440Version =
     versionCache.computeIfAbsent((project, experiment), { case (p, e) =>
       if (p.isEmpty || e.isEmpty) fallbackVersion
       else {
-        val cfg = basedir.resolve(p).resolve(e).resolve(
-          s"cfg_${ArgCodec.encodeFname(p)}_${ArgCodec.encodeFname(e)}.json")
-        val cfgAlt = basedir.resolve(p).resolve(e).resolve(s"cfg_${p}_${e}.json")
-        val path = if (Files.exists(cfg)) cfg else cfgAlt
+        val path = resolvePath(Route.Config, Map("project" -> p, "experiment" -> e))
         if (!Files.exists(path)) fallbackVersion
         else
           try {

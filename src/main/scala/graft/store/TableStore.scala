@@ -1,10 +1,14 @@
 package graft.store
 
 import java.io.FileNotFoundException
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, InvalidPathException, Path, Paths}
 import java.time.Instant
 
+import org.apache.parquet.filter2.compat.FilterCompat
+import org.apache.parquet.filter2.predicate.{FilterApi, FilterPredicate, Operators}
+import org.apache.parquet.io.api.Binary
 import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -25,8 +29,11 @@ import graft.lock.{AdvisoryLock, Locking}
   *    `sqlitedb.py:341-369,500-531`). Point puts buffer in memory and
   *    flush as batch appends — one parquet file per flushed batch, not
   *    per asset, so a bulk copy produces a handful of files per table.
-  *  - Key-equality gets push every predicate into the parquet scan
-  *    (column pruning + row-group min/max skipping are free).
+  *  - Point gets run no Spark job: they read the one partition
+  *    directory the key names with parquet-mr on the driver, key
+  *    equalities pushed down, and resolve the winner in Scala
+  *    ([[lookupRow]]). Catalog queries, compaction and experiment
+  *    deletes stay Spark-planned.
   *  - Tables sharing storage in the reference share here too:
   *    GLOB_STATS / HEATMAP / REGIONAL_STATS → one `glob_stats` table
   *    (`sqlitedb.py:184-249`).
@@ -161,11 +168,11 @@ final class TableStore(spark: SparkSession, basedirRaw: String) extends AssetSto
     * not exist yet or was already deleted. */
   def getByUriAsOf(uri: String, asOf: Long): Option[AssetValue] = {
     val (route, args, kw) = UriCodec.parse(uri)
-    flush(tableFor(route))
-    lookupRow(tableFor(route), args ++ (kw - "version"), Some(asOf)).flatMap { r =>
-      if (Route.blobRoutes.contains(route))
-        Option(r.getAs[Array[Byte]]("blob")).map(AssetValue.Blob.apply)
-      else Option(r.getAs[String]("json")).map(AssetValue.Json.apply)
+    val blob = Route.blobRoutes.contains(route)
+    lookupRow(tableFor(route), args ++ (kw - "version"), Some(if (blob) "blob" else "json"),
+      Some(asOf)).flatMap { r =>
+      if (blob) Option(r.blob).map(AssetValue.Blob.apply)
+      else Option(r.json).map(AssetValue.Json.apply)
     }
   }
 
@@ -185,28 +192,110 @@ final class TableStore(spark: SparkSession, basedirRaw: String) extends AssetSto
     * layout generation lack the newer key components — the analogue of
     * sqlite's per-generation tables, `sqlitedb.py:184-249`), and among
     * matches the row with the most exactly-matching keys and the
-    * fewest non-null surplus keys wins (`sqlitedb.py:441-449`). */
-  private def lookupRow(table: String, keyVals: Map[String, String],
-                        asOf: Option[Long] = None): Option[Row] =
-    liveRows(table, asOf).flatMap { df =>
-      val keys = tableKeys(table)
-      val wc = generationKeys(table)
-      val provided = keyVals.view.filterKeys(keys.contains).toMap
-      val surplus = keys.filterNot(provided.contains)
-      val pred = provided.map { case (k, v) =>
-        if (wc.contains(k)) col(k) === v || col(k).isNull else col(k) === v
-      }.reduceOption(_ && _).getOrElse(lit(true))
-      // constant literals in orderBy would be read as column ordinals —
-      // only add the disambiguation keys when they reference columns
-      val orderCols = Seq.newBuilder[org.apache.spark.sql.Column]
-      val providedWc = provided.keys.filter(wc.contains).toSeq.sorted
-      if (providedWc.nonEmpty)
-        orderCols += providedWc.map(k => when(col(k).isNull, 1).otherwise(0)).reduce(_ + _).asc
-      if (surplus.nonEmpty)
-        orderCols += surplus.map(k => when(col(k).isNull, 0).otherwise(1)).reduce(_ + _).asc
-      orderCols += col("put_time").desc
-      orderCols += col("seq").desc
-      df.filter(pred).orderBy(orderCols.result(): _*).limit(1).collect().headOption
+    * fewest non-null surplus keys wins (`sqlitedb.py:441-449`).
+    *
+    * Served DRIVER-LOCALLY, with no Spark job (the sqlite backend's one
+    * indexed SELECT): [[newestRows]] reads the one partition directory
+    * the key names, and the winner is ranked here in Scala: fewest
+    * generation keys matched by a NULL, then fewest non-null surplus
+    * keys, then the newest `put_time` and `seq`. `payload` names the
+    * column the caller reads (`json` or `blob`), if any. */
+  private def lookupRow(table: String, keyVals: Map[String, String], payload: Option[String],
+                        asOf: Option[Long] = None): Option[LogRow] = {
+    flush(table)
+    val keys = tableKeys(table)
+    val provided = keyVals.view.filterKeys(keys.contains).toMap
+    val wc = generationKeys(table)
+    val providedWc = keys.indices.filter(i => wc.contains(keys(i)) && provided.contains(keys(i)))
+    val surplus = keys.indices.filterNot(i => provided.contains(keys(i)))
+    newestRows(table, provided, payload, asOf).filterNot(_.rm).minByOption(r =>
+      (providedWc.count(r.key(_) == null), surplus.count(r.key(_) != null), -r.putTime, -r.seq))
+  }
+
+  /** [[liveRows]] before its `rm` filter, restricted to the rows whose
+    * keys match `provided` (a NULL generation key matches any value):
+    * with `asOf`, only rows with `seq < asOf`; then the newest row per
+    * full key, `rm` rows included. Read with parquet-mr from the
+    * partition directories `provided` names, the key equalities pushed
+    * down so row groups that cannot match are skipped by their
+    * statistics and dictionaries; the rest are read a column at a
+    * time, the payload decoded only at the matching rows. */
+  private def newestRows(table: String, provided: Map[String, String], payload: Option[String],
+                         asOf: Option[Long]): Iterable[LogRow] = {
+    val keys = tableKeys(table).toIndexedSeq
+    val wc = generationKeys(table)
+    val parts = partitionCols(table)
+    // (column index, value, NULL matches) per provided key stored in the files
+    val matchers = provided.toSeq.filterNot(kv => parts.contains(kv._1)).map { case (k, v) =>
+      (keys.indexOf(k), Binary.fromString(v), wc.contains(k))
+    }
+    val filter = (matchers.map { case (c, v, nullMatches) =>
+      val col = FilterApi.binaryColumn(keys(c))
+      val eq: FilterPredicate = FilterApi.eq[Binary, Operators.BinaryColumn](col, v)
+      if (nullMatches) FilterApi.or(eq, FilterApi.eq[Binary, Operators.BinaryColumn](col, null)) else eq
+    } ++ asOf.map(s => FilterApi.lt[java.lang.Long, Operators.LongColumn](
+      FilterApi.longColumn("seq"), s))).reduceOption(FilterApi.and)
+      .fold(FilterCompat.NOOP)(FilterCompat.get)
+    val columns = (keys ++ Seq("put_time", "seq", "op") ++ payload).toSet
+    // NULLs compare equal, as in the window's partitioning
+    val newest = scala.collection.mutable.HashMap.empty[Seq[String], LogRow]
+    for ((dir, partVals) <- partitionDirs(table, provided); file <- LocalParquet.dataFiles(dir))
+      LocalParquet.foreachRowGroup(file, columns, filter) { rg =>
+        val cols = keys.map(k => if (partVals.contains(k)) null else rg.binaries(k))
+        val seqs = rg.longs("seq")
+        val hit = scala.collection.immutable.BitSet((0 until rg.rows).filter { i =>
+          asOf.forall(seqs(i) < _) && matchers.forall { case (c, v, nullMatches) =>
+            val b = cols(c)(i)
+            if (b == null) nullMatches else b == v
+          }
+        }: _*)
+        if (hit.nonEmpty) {
+          val times = rg.longs("put_time", hit)
+          val ops = rg.binaries("op", hit)
+          val payloads = payload.map(rg.binaries(_, hit))
+          hit.foreach { i =>
+            val key = keys.indices.map { c =>
+              partVals.getOrElse(keys(c), Option(cols(c)(i)).map(_.toStringUsingUTF8).orNull)
+            }
+            val r = LogRow(key, times(i), seqs(i), ops(i) == RmOp, payloads.map(_(i)).orNull)
+            if (newest.get(key).forall(r.newerThan)) newest(key) = r
+          }
+        }
+      }
+    newest.values
+  }
+
+  /** The partition directories a lookup reads, each with the partition
+    * key values it holds: the one escaped `col=value` directory per
+    * provided key, every directory at that level for a key not provided
+    * (the default-partition directory holds NULL). */
+  private def partitionDirs(table: String,
+                            provided: Map[String, String]): Seq[(Path, Map[String, String])] =
+    partitionCols(table).foldLeft(Seq(Paths.get(tablePath(table)) -> Map.empty[String, String])) {
+      case (dirs, c) => dirs.flatMap { case (dir, vals) =>
+        provided.get(c) match {
+          case Some(v) =>
+            val name = ExternalCatalogUtils.escapePathName(v)
+            // a name the platform's file-name charset cannot encode
+            // was never written under that name
+            val sub = try Some(dir.resolve(s"$c=$name")) catch { case _: InvalidPathException => None }
+            sub.filter(d => name != ExternalCatalogUtils.DEFAULT_PARTITION_NAME && Files.isDirectory(d))
+              .map(_ -> (vals + (c -> v))).toSeq
+          case None if Files.isDirectory(dir) =>
+            import scala.jdk.CollectionConverters._
+            scala.util.Using.resource(Files.list(dir))(_.iterator().asScala.toList).flatMap { sub =>
+              val n = sub.getFileName.toString
+              if (!n.startsWith(s"$c=") || !Files.isDirectory(sub)) None
+              else {
+                val raw = n.substring(c.length + 1)
+                val v = if (raw == ExternalCatalogUtils.DEFAULT_PARTITION_NAME) null
+                        else ExternalCatalogUtils.unescapePathName(raw)
+                Some(sub -> (vals + (c -> v)))
+              }
+            }
+          case None => Nil
+        }
+      }
     }
 
   protected def _get(route: Route, routeArgs: Map[String, String],
@@ -222,8 +311,12 @@ final class TableStore(spark: SparkSession, basedirRaw: String) extends AssetSto
     val keyVals = routeArgs ++ (kwargs -- filterArgs.keys)
     val table = tableFor(route)
 
-    val row = lookupRow(table, keyVals)
-    row match {
+    val payload = accessType match {
+      case AccessType.Blob => Some("blob")
+      case AccessType.JsonStr | AccessType.Obj => Some("json")
+      case _ => None
+    }
+    lookupRow(table, keyVals, payload) match {
       case None =>
         default.getOrElse(throw new FileNotFoundException(
           s"No asset for $route with key $keyVals"))
@@ -233,14 +326,14 @@ final class TableStore(spark: SparkSession, basedirRaw: String) extends AssetSto
             AssetValue.Uri(UriCodec.build(route,
               routeArgs.view.filterKeys(route.argNames.contains).toMap,
               kwargs -- filterArgs.keys))
-          case AccessType.Mtime => AssetValue.Time(Instant.ofEpochMilli(r.getAs[Long]("put_time")))
+          case AccessType.Mtime => AssetValue.Time(Instant.ofEpochMilli(r.putTime))
           case AccessType.Ctime =>
             // creation time = oldest put for the key; approximated by
             // the surviving row's time unless history is retained
-            AssetValue.Time(Instant.ofEpochMilli(r.getAs[Long]("put_time")))
-          case AccessType.Blob => AssetValue.Blob(r.getAs[Array[Byte]]("blob"))
+            AssetValue.Time(Instant.ofEpochMilli(r.putTime))
+          case AccessType.Blob => AssetValue.Blob(r.blob)
           case AccessType.JsonStr | AccessType.Obj =>
-            val json = r.getAs[String]("json")
+            val json = r.json
             if (json == null) throw new FileNotFoundException(s"No JSON payload for $keyVals")
             if (filterArgs.isEmpty) {
               if (accessType == AccessType.JsonStr) AssetValue.Json(json)
@@ -259,8 +352,8 @@ final class TableStore(spark: SparkSession, basedirRaw: String) extends AssetSto
     appendRow(tableFor(route), routeArgs ++ kwargs, Some(json), None, "put")
 
   protected def _getBlob(route: Route, routeArgs: Map[String, String]): Array[Byte] =
-    lookupRow(tableFor(route), routeArgs)
-      .map(_.getAs[Array[Byte]]("blob"))
+    lookupRow(tableFor(route), routeArgs, Some("blob"))
+      .map(_.blob)
       .getOrElse(throw new FileNotFoundException(s"No blob for $route $routeArgs"))
 
   protected def _putBlob(obj: Array[Byte], route: Route, routeArgs: Map[String, String]): Unit =
@@ -541,6 +634,18 @@ object TableStore {
     case _                 => Set.empty
   }
 
+  private val RmOp = Binary.fromString("rm")
+
+  /** One row of a table's append log as a point lookup reads it: the
+    * full key, the bookkeeping columns and the payload column the
+    * lookup asked for (null when the row has none or none was asked). */
+  private final case class LogRow(key: Seq[String], putTime: Long, seq: Long, rm: Boolean,
+                                  payload: Binary) {
+    def newerThan(o: LogRow): Boolean = putTime > o.putTime || (putTime == o.putTime && seq > o.seq)
+    def json: String = if (payload == null) null else payload.toStringUsingUTF8
+    def blob: Array[Byte] = if (payload == null) null else payload.getBytes
+  }
+
   /** Monotonic tie-break for same-millisecond appends. */
   private[store] val seqCounter = new java.util.concurrent.atomic.AtomicLong(0L)
 
@@ -572,10 +677,10 @@ object TableStore {
     "map_overlay"       -> Route.MapOverlay,
   )
 
-  def tableFor(route: Route): String = route match {
-    case Route.GlobStats | Route.Heatmap | Route.RegionalStats => "glob_stats"
-    case r => tables.collectFirst { case (t, rr) if rr == r => t }.get
-  }
+  private val tableByRoute: Map[Route, String] =
+    tables.map(_.swap) ++ Seq(Route.GlobStats, Route.RegionalStats).map(_ -> "glob_stats")
+
+  def tableFor(route: Route): String = tableByRoute(route)
 
   /** Superset key columns per table (all layout generations). */
   def tableKeys(table: String): Seq[String] = table match {

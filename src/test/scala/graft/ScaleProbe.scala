@@ -220,10 +220,12 @@ object ScaleProbe {
     }
 
     // ---- TableStore: point-read latency vs append-log depth ----
-    // The 100 TB layout claim: point reads prune to one (project,
-    // experiment) directory, so latency must stay flat as the append
-    // log deepens REP× and return to baseline after compact() — if it
-    // grows with total store size, the partitioning is broken.
+    // The 100 TB layout claim: point reads are driver-local reads of
+    // one (project, experiment) directory, so latency follows the
+    // depth of that directory's log (one file per flush), never the
+    // size of the store, and returns to baseline after compact() — if
+    // the compacted read is slower than the base one, or it grows with
+    // the number of other directories, the partitioning is broken.
     {
       val db = new graft.store.TableStore(spark,
         graft.core.TempDirs.create("graft-scale-store").toString)
@@ -233,7 +235,8 @@ object ScaleProbe {
         db.putMenu(s"""{"p": "$p", "e": "$e", "v": 0}""", p, e)
       db.flushAll()
       def readLat(): Double = {
-        // median of 5 distinct point reads (each a fresh Spark job)
+        // median of 5 distinct point reads (each a driver-local read of
+        // one partition directory, no Spark job)
         val ts = (0 until 5).map { i =>
           val t0 = System.nanoTime()
           db.getMenu(s"p${i % 8}", s"e${i % 5}")
@@ -253,8 +256,8 @@ object ScaleProbe {
       val deep = readLat()
       db.compact("menu")
       val compacted = readLat()
-      println(f"[scale] store_point_read_s base=$base%.3f after_${rep}x_appends=$deep%.3f " +
-        f"after_compact=$compacted%.3f ratios=${deep / base}%.1f/${compacted / base}%.1f")
+      println(f"[scale] store_point_read_ms base=${base * 1e3}%.2f after_${rep}x_appends=${deep * 1e3}%.2f " +
+        f"after_compact=${compacted * 1e3}%.2f ratios=${deep / base}%.1f/${compacted / base}%.1f")
       db.close()
     }
     spark.stop()
